@@ -52,12 +52,13 @@ from pyspark.sql.window import Window
 from spark_iforest_spark.checkpoint import snapshot
 from spark_iforest_spark.nodes import (
     FLAT_NODE_SCHEMA,
+    NODE_FIELDS,
+    TREE_ID,
     PackedForest,
     Tree,
+    forest_to_pandas,
     pack_forest,
     pandas_to_forest,
-    rows_to_forest,
-    tree_to_rows,
 )
 from spark_iforest_spark.params import IForestParams
 from spark_iforest_spark.scorer import avg_length, make_score_udf
@@ -162,22 +163,7 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         return self._checked_set(anomalyScoreCol=value)
 
     # ------------------------------------------------------------------ fit
-    @staticmethod
-    def _phase(name: str, t0: float) -> float:
-        """Optional phase timing to stderr (SPARK_IFOREST_TIMING=1)."""
-        import os
-        import sys
-        import time
-
-        t1 = time.time()
-        if os.environ.get("SPARK_IFOREST_TIMING"):
-            print(f"[iforest-fit] {name}: {t1 - t0:.2f}s", file=sys.stderr, flush=True)
-        return t1
-
     def _fit(self, dataset: DataFrame) -> "IForestModel":
-        import time as _time
-
-        _t = _time.time()
         self._validate_params()
         features_col = self.getFeaturesCol()
         _validate_features_schema(dataset, features_col)
@@ -190,7 +176,6 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         feats = dataset.select(_features_as_array(dataset, features_col).alias("features"))
 
         n = feats.count()
-        _t = self._phase("count", _t)
         if n == 0:
             raise ValueError("cannot fit on an empty dataset")
         fraction = max_samples / n if max_samples > 1 else max_samples
@@ -220,7 +205,6 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
             joined = feats.crossJoin(F.broadcast(tree_ids))
         else:
             joined = self._sample_assign(spark, feats, n, psi, num_trees, bootstrap, rng)
-        _t = self._phase("sample_assign", _t)
 
         max_depth = self.getMaxDepth()
         max_features = self.getMaxFeatures()
@@ -229,18 +213,7 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
             tree_id = int(pdf["treeId"].iloc[0])
             x = np.asarray(pdf["features"].to_list(), dtype=np.float64)
             tree = train_tree(x, max_depth, max_features, seed, tree_id)
-            return pd.DataFrame(
-                tree_to_rows(tree_id, tree),
-                columns=[
-                    "treeID",
-                    "id",
-                    "featureIndex",
-                    "featureValue",
-                    "leftChild",
-                    "rightChild",
-                    "numInstance",
-                ],
-            )
+            return forest_to_pandas([tree], first_tree_id=tree_id)
 
         # Arrow collection + vectorized assembly (round 6): toPandas moves
         # the ~numTrees*2*psi node rows in columnar batches and
@@ -263,7 +236,6 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
             .applyInPandas(build, schema=FLAT_NODE_SCHEMA)
             .toPandas()
         )
-        _t = self._phase("tree_build_collect", _t)
         trees = pandas_to_forest(node_pdf)
         if len(trees) != num_trees:
             raise RuntimeError(f"expected {num_trees} trees, built {len(trees)}")
@@ -280,7 +252,6 @@ class IForest(Estimator, IForestParams, DefaultParamsWritable, DefaultParamsRead
         # second count job (consumed once, see _transform).
         model._threshold_n_hint = n
         predictions = model.transform(dataset)
-        _t = self._phase("eager_transform_threshold", _t)
         model._summary = IForestSummary(
             predictions,
             features_col,
@@ -529,10 +500,7 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
             # (README.md:56). Preserved.
             psi = max_samples * dataset.count()
 
-        spark = dataset.sparkSession
-        score_udf = make_score_udf(
-            self._packed_forest(), psi, bc=self._forest_broadcast(spark)
-        )
+        score_udf = make_score_udf(self._forest_broadcast(dataset.sparkSession), psi)
         scored = dataset.withColumn(
             score_col, score_udf(_features_as_array(dataset, features_col))
         )
@@ -596,7 +564,10 @@ class IForestModel(Model, IForestParams, MLWritable, MLReadable):
                     .collect()[0]
                 )
                 return float(row["_thr"])
-        return scored.approxQuantile(score_col, [q], rel_err)[0]
+        # an empty input has no quantile: the threshold stays unset (-1)
+        # until a transform sees rows
+        qs = scored.approxQuantile(score_col, [q], rel_err)
+        return qs[0] if qs else -1.0
 
     def copy(self, extra=None) -> "IForestModel":
         if extra is None:
@@ -636,16 +607,12 @@ class IForestModelWriter(MLWriter):
     def saveImpl(self, path: str) -> None:
         model = self.instance
         DefaultParamsWriter.saveMetadata(model, path, self.sc)
-        rows = []
-        for tree_id, tree in enumerate(model.trees):
-            for (tid, nid, fi, fv, lc, rc, ni) in tree_to_rows(tree_id, tree):
-                rows.append((tid, (nid, fi, fv, lc, rc, ni)))
-        spark = self.sparkSession
-        schema = (
-            "treeID INT, nodeData STRUCT<id: INT, featureIndex: INT, "
-            "featureValue: DOUBLE, leftChild: INT, rightChild: INT, numInstance: BIGINT>"
+        flat = self.sparkSession.createDataFrame(
+            forest_to_pandas(model.trees), schema=FLAT_NODE_SCHEMA
         )
-        spark.createDataFrame(rows, schema=schema).write.parquet(path + "/data")
+        flat.select(TREE_ID, F.struct(*NODE_FIELDS).alias("nodeData")).write.parquet(
+            path + "/data"
+        )
 
 
 class IForestModelReader(MLReader):
@@ -654,20 +621,12 @@ class IForestModelReader(MLReader):
         class_name = metadata["class"]
         if "IForestModel" not in class_name:
             raise ValueError(f"expected IForestModel metadata, found class {class_name}")
-        df = self.sparkSession.read.parquet(path + "/data")
-        rows = [
-            {
-                "treeID": r["treeID"],
-                "id": r["nodeData"]["id"],
-                "featureIndex": r["nodeData"]["featureIndex"],
-                "featureValue": r["nodeData"]["featureValue"],
-                "leftChild": r["nodeData"]["leftChild"],
-                "rightChild": r["nodeData"]["rightChild"],
-                "numInstance": r["nodeData"]["numInstance"],
-            }
-            for r in df.collect()
-        ]
-        model = IForestModel(trees=rows_to_forest(rows))
+        node_pdf = (
+            self.sparkSession.read.parquet(path + "/data")
+            .select(TREE_ID, "nodeData.*")
+            .toPandas()
+        )
+        model = IForestModel(trees=pandas_to_forest(node_pdf))
         model._resetUid(metadata["uid"])
         DefaultParamsReader.getAndSetParams(model, metadata)
         return model

@@ -21,17 +21,18 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pandas as pd
 
-# Parquet schema of one persisted node row (reference EnsembleNodeData,
-# IForest.scala:189-196,225-228: nested struct {treeID, nodeData{...}}).
-NODE_DATA_SCHEMA = (
-    "treeID INT NOT NULL, "
-    "nodeData STRUCT<id: INT, featureIndex: INT, featureValue: DOUBLE, "
-    "leftChild: INT, rightChild: INT, numInstance: BIGINT> NOT NULL"
+# The node table: one row per node, pre-order ids per tree. The flat form
+# travels the applyInPandas wire during training and keys the segmented
+# model relation; the persisted form nests everything after ``treeID`` in
+# a ``nodeData`` struct (reference EnsembleNodeData, IForest.scala:189-196,
+# 225-228). Other modules name these columns only through the constants
+# below.
+NODE_COLUMNS = (
+    "treeID", "id", "featureIndex", "featureValue", "leftChild", "rightChild", "numInstance"
 )
-
-# Flat variant used on the applyInPandas wire during training (cheaper than
-# a nested struct through Arrow; nested only at the persistence boundary).
+TREE_ID, NODE_FIELDS = NODE_COLUMNS[0], NODE_COLUMNS[1:]
 FLAT_NODE_SCHEMA = (
     "treeID INT, id INT, featureIndex INT, featureValue DOUBLE, "
     "leftChild INT, rightChild INT, numInstance BIGINT"
@@ -108,75 +109,49 @@ class TreeBuilder:
 
 
 def tree_to_rows(tree_id: int, tree: Tree) -> list[tuple]:
-    """Flatten one tree to (treeID, id, featureIndex, featureValue, leftChild,
-    rightChild, numInstance) rows. Node ids are already pre-order."""
-    return [
-        (
-            int(tree_id),
-            int(i),
-            int(tree.feature_index[i]),
-            float(tree.feature_value[i]),
-            int(tree.left[i]),
-            int(tree.right[i]),
-            int(tree.num_instance[i]),
-        )
-        for i in range(tree.num_nodes)
-    ]
+    """One tree's node table as Python tuples in ``NODE_COLUMNS`` order."""
+    table = forest_to_pandas([tree], tree_id).astype(object)
+    return list(table.itertuples(index=False, name=None))
 
 
-def rows_to_forest(rows) -> list[Tree]:
-    """Rebuild a forest from flat node rows.
-
-    Accepts any iterable of objects with attributes/keys
-    (treeID, id, featureIndex, featureValue, leftChild, rightChild,
-    numInstance). Enforces the reference's load invariants
-    (IForest.scala:259-281): ids are dense 0..n-1 per tree, root is node 0,
-    forest ordered by treeID.
-    """
-    by_tree: dict[int, list] = {}
-    for r in rows:
-        by_tree.setdefault(int(r["treeID"] if isinstance(r, dict) else r.treeID), []).append(r)
-
-    def field(r, name):
-        return r[name] if isinstance(r, dict) else getattr(r, name)
-
-    forest: list[Tree] = []
-    expected = list(range(len(by_tree)))
-    if sorted(by_tree) != expected:
-        raise ValueError(f"tree ids must be dense 0..{len(by_tree) - 1}, got {sorted(by_tree)}")
-    for tid in expected:
-        nodes = sorted(by_tree[tid], key=lambda r: field(r, "id"))
-        n = len(nodes)
-        ids = [field(r, "id") for r in nodes]
-        if ids != list(range(n)):
-            raise ValueError(f"tree {tid}: node ids must be dense 0..{n - 1}")
-        forest.append(
-            Tree(
-                feature_index=np.asarray([field(r, "featureIndex") for r in nodes], dtype=np.int32),
-                feature_value=np.asarray([field(r, "featureValue") for r in nodes], dtype=np.float64),
-                left=np.asarray([field(r, "leftChild") for r in nodes], dtype=np.int32),
-                right=np.asarray([field(r, "rightChild") for r in nodes], dtype=np.int32),
-                num_instance=np.asarray([field(r, "numInstance") for r in nodes], dtype=np.int64),
-            )
-        )
-    return forest
+def _cat(arrays: list[np.ndarray], dtype) -> np.ndarray:
+    return np.concatenate(arrays).astype(dtype, copy=False) if arrays else np.empty(0, dtype)
 
 
-def pandas_to_forest(pdf) -> list[Tree]:
-    """Vectorized ``rows_to_forest`` for an Arrow-collected node table
-    (round 6): the fit path moves ~25k nodes × 7 fields through numpy
-    column slices instead of ~175k per-field Python calls. Same load
-    invariants (dense tree ids, dense per-tree node ids, root 0) enforced
-    vectorized; ``rows_to_forest`` remains for Row/dict iterables."""
-    tid_raw = pdf["treeID"].to_numpy()
-    order = np.lexsort((pdf["id"].to_numpy(), tid_raw))
-    tid = tid_raw[order]
-    nid = pdf["id"].to_numpy()[order]
-    fi = pdf["featureIndex"].to_numpy()[order].astype(np.int32)
-    fv = pdf["featureValue"].to_numpy()[order].astype(np.float64)
-    lc = pdf["leftChild"].to_numpy()[order].astype(np.int32)
-    rc = pdf["rightChild"].to_numpy()[order].astype(np.int32)
-    ni = pdf["numInstance"].to_numpy()[order].astype(np.int64)
+def forest_to_pandas(trees: list[Tree], first_tree_id: int = 0) -> pd.DataFrame:
+    """The flat node table (``NODE_COLUMNS``) of ``trees``, tree ids
+    counting up from ``first_tree_id``: whole-column numpy concatenation,
+    no per-node Python objects."""
+    sizes = np.array([t.num_nodes for t in trees], dtype=np.int64)
+    starts = np.cumsum(sizes) - sizes
+    tree_ids = np.arange(first_tree_id, first_tree_id + len(trees), dtype=np.int32)
+    return pd.DataFrame(
+        {
+            "treeID": np.repeat(tree_ids, sizes),
+            "id": (np.arange(sizes.sum()) - np.repeat(starts, sizes)).astype(np.int32),
+            "featureIndex": _cat([t.feature_index for t in trees], np.int32),
+            "featureValue": _cat([t.feature_value for t in trees], np.float64),
+            "leftChild": _cat([t.left for t in trees], np.int32),
+            "rightChild": _cat([t.right for t in trees], np.int32),
+            "numInstance": _cat([t.num_instance for t in trees], np.int64),
+        }
+    )
+
+
+def pandas_to_forest(pdf: pd.DataFrame) -> list[Tree]:
+    """Rebuild a forest from a node table in any row order (extra columns
+    are ignored). Enforces the reference's load invariants
+    (IForest.scala:259-281): tree ids dense 0..T-1, node ids dense 0..n-1
+    per tree (root 0), forest ordered by treeID."""
+    col = {c: pdf[c].to_numpy() for c in NODE_COLUMNS}
+    order = np.lexsort((col["id"], col["treeID"]))
+    tid = col["treeID"][order]
+    nid = col["id"][order]
+    fi = col["featureIndex"][order].astype(np.int32)
+    fv = col["featureValue"][order].astype(np.float64)
+    lc = col["leftChild"][order].astype(np.int32)
+    rc = col["rightChild"][order].astype(np.int32)
+    ni = col["numInstance"][order].astype(np.int64)
     uniq, starts = np.unique(tid, return_index=True)
     if not np.array_equal(uniq, np.arange(len(uniq))):
         raise ValueError(
@@ -198,6 +173,12 @@ def pandas_to_forest(pdf) -> list[Tree]:
             )
         )
     return forest
+
+
+def rows_to_forest(rows) -> list[Tree]:
+    """``pandas_to_forest`` over node rows: dicts keyed by ``NODE_COLUMNS``
+    or tuples in that order."""
+    return pandas_to_forest(pd.DataFrame.from_records(list(rows), columns=NODE_COLUMNS))
 
 
 @dataclass

@@ -49,49 +49,12 @@ def _avg_length_vec(sizes: np.ndarray) -> np.ndarray:
     return out
 
 
-# Trees-per-block for the scoring descent. 1 = per-tree B-sized working
-# arrays (L2-resident, the shape that survives 32 concurrent workers).
-# Blocked variants (C,B) were measured in round 6 (SCALE.md): under full
-# 32-worker concurrency the extra page traffic erases the Python-call
-# savings, so 1 stays the default; the knob remains for narrow deployments
-# (few workers per host, large L3) where C=4-8 wins modestly.
-SCORE_TREE_BLOCK = 1
-
-
-def _path_lengths_blocked(forest: PackedForest, x: np.ndarray, block: int) -> np.ndarray:
-    """(C,B)-matrix descent over blocks of C trees: same gathers and
-    per-tree path lengths as the per-tree loop; only the final per-tree
-    ACCUMULATION order differs (block-sum vs running-sum), so results can
-    drift by float64 rounding in the last ulp — which is why the default
-    stays 1 (the bit-exact pins in tests/gates compare the per-tree
-    path). ~C× fewer Python-level iterations, C× larger working set."""
-    b = x.shape[0]
-    t = forest.num_trees
-    fi, fv = forest.feature_index, forest.feature_value
-    left, right = forest.left, forest.right
-    not_leaf_f, leaf_adjust = forest.not_leaf_f, forest.leaf_adjust
-    xt = np.ascontiguousarray(x.T)
-    flat = xt.reshape(-1)
-    cols = np.arange(b, dtype=np.int64)
-    total = np.zeros(b, dtype=np.float64)
-    for c0 in range(0, t, block):
-        c1 = min(c0 + block, t)
-        c = c1 - c0
-        node = np.repeat(
-            np.asarray(forest.offsets[c0:c1], dtype=np.int64), b
-        ).reshape(c, b)
-        depth = np.zeros((c, b), dtype=np.float64)
-        lin = np.empty((c, b), dtype=np.int64)
-        for _ in range(int(np.max(forest.tree_depth[c0:c1]))):
-            np.multiply(fi[node], b, out=lin)
-            lin += cols
-            val = flat[lin]
-            go_left = val < fv[node]
-            depth += not_leaf_f[node]
-            node = np.where(go_left, left[node], right[node])
-        total += depth.sum(axis=0)
-        total += leaf_adjust[node].sum(axis=0)
-    return total / t
+# Rows per descent call: the B-sized working arrays of path_lengths must
+# stay cache-resident. A 500k-row call streams multi-MB arrays through
+# every numpy op and collapses under many concurrent workers, like the
+# (T,B) formulation path_lengths rejects. 16k rows ≈ 128 KB per working
+# array. Rows descend independently, so blocking leaves scores bit-equal.
+_BLOCK_ROWS = 16_384
 
 
 def path_lengths(forest: PackedForest, x: np.ndarray) -> np.ndarray:
@@ -99,14 +62,11 @@ def path_lengths(forest: PackedForest, x: np.ndarray) -> np.ndarray:
 
     x: (B, d) float64. Returns (B,) float64.
 
-    Branchless level-synchronous descent over a (T, B) node matrix: ALL
-    trees advance ALL rows one level per iteration (leaves self-loop, so no
-    active-set bookkeeping), for forest.max_depth iterations total. Python
-    overhead is O(depth) instead of O(trees × depth); the inner work is
-    whole-matrix gathers that numpy vectorizes.
+    Branchless level-synchronous descent, one tree at a time: the tree
+    advances ALL rows one level per iteration (leaves self-loop, so no
+    active-set bookkeeping), for that tree's depth iterations. The inner
+    work is whole-batch gathers that numpy vectorizes.
     """
-    if SCORE_TREE_BLOCK > 1:
-        return _path_lengths_blocked(forest, x, SCORE_TREE_BLOCK)
     b = x.shape[0]
     t = forest.num_trees
     fi, fv = forest.feature_index, forest.feature_value
@@ -119,7 +79,6 @@ def path_lengths(forest: PackedForest, x: np.ndarray) -> np.ndarray:
     # page-zeroing and it collapses (measured 27x slowdown). B-sized arrays
     # (~80 KB) keep the whole working set L2-resident and scale linearly.
     xt = np.ascontiguousarray(x.T)  # (d, B): one contiguous row per feature
-    d = xt.shape[0]
     flat = xt.reshape(-1)
     cols = np.arange(b, dtype=np.int64)
     total = np.zeros(b, dtype=np.float64)
@@ -143,22 +102,13 @@ def path_lengths(forest: PackedForest, x: np.ndarray) -> np.ndarray:
     return total / t
 
 
-def anomaly_scores(
-    forest: PackedForest, x: np.ndarray, psi: float, block: int | None = None
-) -> np.ndarray:
-    """score = 2^(-avgPathLength / c(psi)) (IForest.scala:92-99).
-
-    ``block`` overrides SCORE_TREE_BLOCK (worker closures capture the
-    driver's setting at UDF build time and pass it explicitly — a module
-    variable set on the driver does not reach executor pythons)."""
+def anomaly_scores(forest: PackedForest, x: np.ndarray, psi: float) -> np.ndarray:
+    """score = 2^(-avgPathLength / c(psi)) (IForest.scala:92-99), computed
+    over row blocks of ``_BLOCK_ROWS``."""
     norm = avg_length(psi)
-    if block is None:
-        block = SCORE_TREE_BLOCK
-    apl = (
-        _path_lengths_blocked(forest, x, block)
-        if block > 1
-        else path_lengths(forest, x)
-    )
+    apl = np.empty(len(x), dtype=np.float64)
+    for lo in range(0, len(x), _BLOCK_ROWS):
+        apl[lo : lo + _BLOCK_ROWS] = path_lengths(forest, x[lo : lo + _BLOCK_ROWS])
     if norm == 0.0:
         # psi < 2: degenerate normalizer; reference would divide by zero.
         # Guard with the standard convention score=1 for apl=0 else 0 exponent.
@@ -166,29 +116,19 @@ def anomaly_scores(
     return np.power(2.0, -apl / norm)
 
 
-def make_score_udf(forest: PackedForest, psi: float, spark=None, bc=None):
-    """Build a pandas_udf(array<double> -> double) scoring closure.
-
-    Ship the forest via sparkContext.broadcast (one copy per executor,
-    torrent transfer) instead of pickling it into every task closure — the
-    reference broadcasts its model the same way (IForest.scala:90). Pass a
-    pre-built ``bc`` to reuse one broadcast across many transform() calls
-    (IForestModel caches it per application); otherwise a SparkSession
-    creates a fresh one.
-    """
+def make_score_udf(bc, psi: float):
+    """Build a pandas_udf(array<double> -> double) scoring closure over
+    ``bc``, a sparkContext.broadcast of the PackedForest: one copy per
+    executor, torrent transfer, the way the reference ships its model
+    (IForest.scala:90)."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
-    if bc is None and spark is not None:
-        bc = spark.sparkContext.broadcast(forest)
-    blk = SCORE_TREE_BLOCK  # captured by value; ships inside the closure
-
     @pandas_udf("double")
     def score_udf(features: pd.Series) -> pd.Series:
-        fo = bc.value if bc is not None else forest
         x = np.asarray(features.to_list(), dtype=np.float64)
-        if x.ndim != 2:  # ragged rows — fall back to per-row padding-free path
+        if x.ndim != 2:  # ragged rows
             raise ValueError("feature arrays must be fixed-length per batch")
-        return pd.Series(anomaly_scores(fo, x, psi, block=blk))
+        return pd.Series(anomaly_scores(bc.value, x, psi))
 
     return score_udf

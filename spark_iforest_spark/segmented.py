@@ -35,7 +35,13 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from spark_iforest_spark.nodes import pack_forest, pandas_to_forest, tree_to_rows
+from spark_iforest_spark.nodes import (
+    FLAT_NODE_SCHEMA,
+    TREE_ID,
+    forest_to_pandas,
+    pack_forest,
+    pandas_to_forest,
+)
 from spark_iforest_spark.scorer import anomaly_scores
 from spark_iforest_spark.trainer import train_tree
 
@@ -45,28 +51,6 @@ from spark_iforest_spark.trainer import train_tree
 # key + id) ≈ 10 MB per Python worker — L2/L3-friendly, far under the
 # executor budget).
 _SCORE_BUFFER_ROWS = 65_536
-
-# whole-segment kernel calls cap their row-block size here: the descent's
-# B-sized working arrays (scorer.path_lengths) must stay cache-resident —
-# a 500k-row segment scored in one call streams multi-MB arrays through
-# every numpy op, which collapses under many concurrent workers exactly
-# like the (T,B) formulation the scorer rejects. 16k rows ≈ 128 KB per
-# working array. Scores are bit-identical (row-independent kernel).
-_SCORE_BLOCK_ROWS = 16_384
-
-
-def _blocked_scores(forest, x: np.ndarray, psi: float) -> np.ndarray:
-    """anomaly_scores over row blocks of ``_SCORE_BLOCK_ROWS`` — same
-    values (each row's descent is independent), bounded working set."""
-    n = len(x)
-    if n <= _SCORE_BLOCK_ROWS:
-        return anomaly_scores(forest, x, psi)
-    out = np.empty(n, dtype=np.float64)
-    for lo in range(0, n, _SCORE_BLOCK_ROWS):
-        hi = min(lo + _SCORE_BLOCK_ROWS, n)
-        out[lo:hi] = anomaly_scores(forest, x[lo:hi], psi)
-    return out
-
 
 def _group_seed(seed: int, key) -> np.random.SeedSequence:
     # canonicalize numpy scalars BEFORE repr (round-8 advice fix):
@@ -147,6 +131,34 @@ def _cluster_by_key(src: DataFrame) -> DataFrame:
     return src.repartition(shuffle_partitions(src.sparkSession), "_key")
 
 
+def _keyed_scoring(
+    df: DataFrame, key_col: str, features_col: str, id_col: str | None, run
+) -> DataFrame:
+    """The shared shape of every scoring pass: select ``(_key, [_id],
+    _feat)`` from ``df``, let ``run(src, out_schema)`` build the
+    ``(_key, [_id], anomalyScore, prediction)`` relation, and rename the
+    key and id columns back."""
+    sel = [F.col(key_col).alias("_key"), F.col(features_col).cast("array<double>").alias("_feat")]
+    if id_col is not None:
+        sel.insert(1, F.col(id_col).alias("_id"))
+    key_type = df.schema[key_col].dataType.simpleString()
+    id_part = f"_id {df.schema[id_col].dataType.simpleString()}, " if id_col else ""
+    out_schema = f"_key {key_type}, {id_part}anomalyScore double, prediction int"
+    result = run(df.select(*sel), out_schema)
+    renames = [F.col("_key").alias(key_col)]
+    if id_col is not None:
+        renames.append(F.col("_id").alias(id_col))
+    return result.select(*renames, "anomalyScore", "prediction")
+
+
+def _passthrough(pdf: pd.DataFrame, id_col: str | None) -> dict:
+    """The key and optional id columns a scoring task hands back."""
+    out = {"_key": pdf["_key"]}
+    if id_col is not None:
+        out["_id"] = pdf["_id"]
+    return out
+
+
 def _order_stat_threshold(scores: np.ndarray, contamination: float) -> float:
     """The exact ``ceil((1-contamination) * n)``-th smallest score (same
     order-statistic definition as the flagship's relErr=0 path)."""
@@ -182,16 +194,6 @@ def fit_score_groups(
     segment (the point of segmentation), not across segments with
     different ψ.
     """
-    sel = [F.col(key_col).alias("_key"), F.col(features_col).cast("array<double>").alias("_feat")]
-    if id_col is not None:
-        sel.insert(1, F.col(id_col).alias("_id"))
-    src = df.select(*sel)
-    key_type = df.schema[key_col].dataType.simpleString()
-    id_part = f"_id {df.schema[id_col].dataType.simpleString()}, " if id_col else ""
-    out_schema = (
-        f"_key {key_type}, {id_part}anomalyScore double, prediction int"
-    )
-
     def fit_score(pdf: pd.DataFrame) -> pd.DataFrame:
         key = pdf["_key"].iloc[0]
         n = len(pdf)
@@ -205,25 +207,24 @@ def fit_score_groups(
         trees, psi = _segment_forest(
             x, key, num_trees, max_samples, max_depth, max_features, seed
         )
-        forest = pack_forest(trees)
-        scores = _blocked_scores(forest, x, float(psi))
+        scores = anomaly_scores(pack_forest(trees), x, float(psi))
         # threshold = the ceil((1-contamination)*n)-th smallest score,
         # prediction = score > threshold
         thr = _order_stat_threshold(scores, contamination)
-        out = {"_key": pdf["_key"]}
-        if id_col is not None:
-            out["_id"] = pdf["_id"]
+        out = _passthrough(pdf, id_col)
         out["anomalyScore"] = scores
         out["prediction"] = (scores > thr).astype(np.int32)
         return pd.DataFrame(out)
 
-    result = _cluster_by_key(src).groupBy("_key").applyInPandas(
-        fit_score, schema=out_schema
+    return _keyed_scoring(
+        df,
+        key_col,
+        features_col,
+        id_col,
+        lambda src, out_schema: _cluster_by_key(src)
+        .groupBy("_key")
+        .applyInPandas(fit_score, schema=out_schema),
     )
-    renames = [F.col("_key").alias(key_col)]
-    if id_col is not None:
-        renames.append(F.col("_id").alias(id_col))
-    return result.select(*renames, "anomalyScore", "prediction")
 
 
 # ------------------------------------------------------- model lifecycle
@@ -233,10 +234,6 @@ def fit_score_groups(
 # at segment granularity, which is what makes per-tenant forests reusable —
 # score tomorrow's events against today's fitted segments without refitting.
 
-_NODE_COLS = (
-    "treeID int, id int, featureIndex int, featureValue double, "
-    "leftChild int, rightChild int, numInstance long"
-)
 _META_COLS = "psi double, threshold double, n_rows long"
 
 
@@ -264,7 +261,7 @@ class SegmentedIForestModel:
             F.first("psi").alias("psi"),
             F.first("threshold").alias("threshold"),
             F.first("n_rows").alias("n_rows"),
-            (F.max("treeID") + 1).alias("n_trees"),
+            (F.max(TREE_ID) + 1).alias("n_trees"),
             F.count(F.lit(1)).alias("n_nodes"),
         )
 
@@ -283,25 +280,14 @@ class SegmentedIForestModel:
         bit-exactly (pytest-pinned): same packed forest (float64 survives
         the parquet round-trip losslessly), same psi, same stored
         threshold."""
-        fcol = features_col or self.features_col
-        key_col = self.key_col
-        sel = [F.col(key_col).alias("_key"), F.col(fcol).cast("array<double>").alias("_feat")]
-        if id_col is not None:
-            sel.insert(1, F.col(id_col).alias("_id"))
-        src = df.select(*sel)
-        key_type = df.schema[key_col].dataType.simpleString()
-        id_part = f"_id {df.schema[id_col].dataType.simpleString()}, " if id_col else ""
-        out_schema = f"_key {key_type}, {id_part}anomalyScore double, prediction int"
-        nodes = self.nodes.withColumnRenamed(key_col, "_key")
+        nodes = self.nodes.withColumnRenamed(self.key_col, "_key")
 
         def score(rows: pd.DataFrame, model: pd.DataFrame) -> pd.DataFrame:
             if not len(rows):
                 return pd.DataFrame(
                     {c: [] for c in ["_key", *(["_id"] if id_col else []), "anomalyScore", "prediction"]}
                 )
-            out = {"_key": rows["_key"]}
-            if id_col is not None:
-                out["_id"] = rows["_id"]
+            out = _passthrough(rows, id_col)
             if not len(model):
                 # unfitted segment: true SQL NULLs (nullable pandas dtypes
                 # — a float NaN would survive as NaN, not NULL)
@@ -310,22 +296,22 @@ class SegmentedIForestModel:
                 return pd.DataFrame(out)
             forest = pack_forest(pandas_to_forest(model))
             x = np.asarray(rows["_feat"].to_list(), dtype=np.float64)
-            scores = _blocked_scores(forest, x, float(model["psi"].iloc[0]))
+            scores = anomaly_scores(forest, x, float(model["psi"].iloc[0]))
             thr = float(model["threshold"].iloc[0])
             out["anomalyScore"] = scores
             out["prediction"] = (scores > thr).astype(np.int32)
             return pd.DataFrame(out)
 
-        result = (
-            _cluster_by_key(src)
+        return _keyed_scoring(
+            df,
+            self.key_col,
+            features_col or self.features_col,
+            id_col,
+            lambda src, out_schema: _cluster_by_key(src)
             .groupby("_key")
             .cogroup(_cluster_by_key(nodes).groupby("_key"))
-            .applyInPandas(score, schema=out_schema)
+            .applyInPandas(score, schema=out_schema),
         )
-        renames = [F.col("_key").alias(key_col)]
-        if id_col is not None:
-            renames.append(F.col("_id").alias(id_col))
-        return result.select(*renames, "anomalyScore", "prediction")
 
     def transform_broadcast(
         self,
@@ -370,14 +356,6 @@ class SegmentedIForestModel:
                 float(g["psi"].iloc[0]),
                 float(g["threshold"].iloc[0]),
             )
-        fcol = features_col or self.features_col
-        sel = [F.col(key_col).alias("_key"), F.col(fcol).cast("array<double>").alias("_feat")]
-        if id_col is not None:
-            sel.insert(1, F.col(id_col).alias("_id"))
-        src = df.select(*sel)
-        key_type = df.schema[key_col].dataType.simpleString()
-        id_part = f"_id {df.schema[id_col].dataType.simpleString()}, " if id_col else ""
-        out_schema = f"_key {key_type}, {id_part}anomalyScore double, prediction int"
 
         def score_chunk(pdf):
             pdf = pdf.reset_index(drop=True)  # positions == labels
@@ -389,13 +367,16 @@ class SegmentedIForestModel:
             scores_np = np.full(n, np.nan)
             preds_np = np.zeros(n, dtype=np.int32)
             covered = sum(len(g) for g, hit in groups if hit is not None)
+            x_all = None
             if covered == n:
                 # every segment fitted (the steady state): ONE Arrow->numpy
                 # conversion for the whole chunk, groups score from
                 # row-index slices (the flagship scorer's conversion
-                # pattern, scorer.py:189) — per-group to_list()
-                # re-conversion was a measured ~20% of scoring wall at
-                # sf2.5
+                # pattern) — per-group to_list() re-conversion was a
+                # measured ~20% of scoring wall at sf2.5. With unfitted
+                # segments present only fitted groups' rows are converted:
+                # an unfitted segment's rows may carry NULL/ragged feature
+                # arrays that the contract returns as NULL score/prediction
                 try:
                     x_all = np.asarray(pdf["_feat"].to_list(), dtype=np.float64)
                 except ValueError:
@@ -404,35 +385,21 @@ class SegmentedIForestModel:
                     # segment (review-caught): a ragged chunk can't
                     # convert in one shot — score per group instead
                     # (bit-equal, just the pre-batching conversion cost)
-                    x_all = None
-                for g, (forest, psi, thr) in groups:
-                    idx = g.index.to_numpy()
-                    x = (
-                        x_all[idx]
-                        if x_all is not None
-                        else np.asarray(g["_feat"].to_list(), dtype=np.float64)
-                    )
-                    s = _blocked_scores(forest, x, psi)
-                    scores_np[idx] = s
-                    preds_np[idx] = s > thr
-            else:
-                # unfitted segments present: convert ONLY fitted groups'
-                # rows — an unfitted segment's rows may carry NULL/ragged
-                # feature arrays (nothing was ever fitted on them), and a
-                # whole-chunk conversion would crash on rows the contract
-                # says must come back as NULL score/prediction
-                for g, hit in groups:
-                    if hit is None:
-                        continue
-                    forest, psi, thr = hit
-                    x = np.asarray(g["_feat"].to_list(), dtype=np.float64)
-                    idx = g.index.to_numpy()
-                    s = _blocked_scores(forest, x, psi)
-                    scores_np[idx] = s
-                    preds_np[idx] = s > thr
-            out = {"_key": pdf["_key"]}
-            if id_col is not None:
-                out["_id"] = pdf["_id"]
+                    pass
+            for g, hit in groups:
+                if hit is None:
+                    continue
+                forest, psi, thr = hit
+                idx = g.index.to_numpy()
+                x = (
+                    x_all[idx]
+                    if x_all is not None
+                    else np.asarray(g["_feat"].to_list(), dtype=np.float64)
+                )
+                s = anomaly_scores(forest, x, psi)
+                scores_np[idx] = s
+                preds_np[idx] = s > thr
+            out = _passthrough(pdf, id_col)
             if covered == n:
                 # every segment fitted (the steady state): plain numpy
                 # columns, no masked-array write amplification
@@ -477,11 +444,13 @@ class SegmentedIForestModel:
                     pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
                 )
 
-        result = src.mapInPandas(score_batches, schema=out_schema)
-        renames = [F.col("_key").alias(key_col)]
-        if id_col is not None:
-            renames.append(F.col("_id").alias(id_col))
-        return result.select(*renames, "anomalyScore", "prediction")
+        return _keyed_scoring(
+            df,
+            key_col,
+            features_col or self.features_col,
+            id_col,
+            lambda src, out_schema: src.mapInPandas(score_batches, schema=out_schema),
+        )
 
     def save(self, path: str) -> None:
         """Persist to ``path`` on ANY Hadoop filesystem: the node relation
@@ -544,7 +513,7 @@ def fit_groups(
         F.col(features_col).cast("array<double>").alias("_feat"),
     )
     key_type = df.schema[key_col].dataType.simpleString()
-    out_schema = f"_key {key_type}, {_NODE_COLS}, {_META_COLS}"
+    out_schema = f"_key {key_type}, {FLAT_NODE_SCHEMA}, {_META_COLS}"
 
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         key = pdf["_key"].iloc[0]
@@ -559,24 +528,13 @@ def fit_groups(
         trees, psi = _segment_forest(
             x, key, num_trees, max_samples, max_depth, max_features, seed
         )
-        scores = _blocked_scores(pack_forest(trees), x, float(psi))
-        thr = _order_stat_threshold(scores, contamination)
-        rows = [r for t, tree in enumerate(trees) for r in tree_to_rows(t, tree)]
-        return pd.DataFrame(
-            {
-                "_key": [key] * len(rows),
-                "treeID": [r[0] for r in rows],
-                "id": [r[1] for r in rows],
-                "featureIndex": [r[2] for r in rows],
-                "featureValue": [r[3] for r in rows],
-                "leftChild": [r[4] for r in rows],
-                "rightChild": [r[5] for r in rows],
-                "numInstance": [r[6] for r in rows],
-                "psi": float(psi),
-                "threshold": thr,
-                "n_rows": n,
-            }
-        )
+        scores = anomaly_scores(pack_forest(trees), x, float(psi))
+        out = forest_to_pandas(trees)
+        out.insert(0, "_key", key)
+        out["psi"] = float(psi)
+        out["threshold"] = _order_stat_threshold(scores, contamination)
+        out["n_rows"] = n
+        return out
 
     nodes = (
         _cluster_by_key(src)

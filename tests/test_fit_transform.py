@@ -147,6 +147,24 @@ def test_threshold_statefulness(spark):
     assert out.where("prediction > 0").count() == 0
 
 
+def test_transform_empty_frame_leaves_threshold_unset(spark, tmp_path):
+    # an unset threshold is computed from the scored rows; an empty frame
+    # has none, so transform returns an empty scored frame and the
+    # threshold stays -1 until a transform sees rows
+    df = iforest_data(spark, rows=20)
+    model = IForest(numTrees=5, contamination=0.2, seed=3).fit(df)
+    model.write().overwrite().save(str(tmp_path / "m"))
+    for m, rel_err in ((IForestModel.load(str(tmp_path / "m")), 0.0), (model.copy(), 0.05)):
+        m.setThreshold(-1.0)
+        m.set(m.approxQuantileRelativeError, rel_err)
+        out = m.transform(df.limit(0))
+        assert {"anomalyScore", "prediction"} <= set(out.columns)
+        assert out.collect() == []
+        assert m.getThreshold() == -1.0
+        m.transform(df).collect()
+        assert m.getThreshold() > 0
+
+
 def test_copy_model(spark):
     df = iforest_data(spark, 10, 2)
     model = IForest(numTrees=5, contamination=0.2, seed=10).fit(df)

@@ -9,7 +9,14 @@ import math
 import numpy as np
 from hypothesis import given, settings, strategies as st
 
-from spark_iforest_spark.nodes import Tree, pack_forest, rows_to_forest, tree_to_rows
+from spark_iforest_spark.nodes import (
+    Tree,
+    forest_to_pandas,
+    pack_forest,
+    pandas_to_forest,
+    rows_to_forest,
+    tree_to_rows,
+)
 from spark_iforest_spark.scorer import EULER_CONSTANT, anomaly_scores, avg_length, path_lengths
 from spark_iforest_spark.trainer import build_itree, depth_cap, train_tree
 
@@ -52,6 +59,9 @@ def test_roundtrip_and_scores(x, max_depth, seed):
         r)) for t, tree in enumerate(trees) for r in tree_to_rows(t, tree)]
     rebuilt = rows_to_forest(rows)
     assert all(a == b for a, b in zip(trees, rebuilt))
+    # ... and through the flat node table, in any row order
+    flat = forest_to_pandas(trees)
+    assert pandas_to_forest(flat.iloc[::-1]) == trees
     # scores are in (0, 1] and deterministic
     forest = pack_forest(trees)
     s1 = anomaly_scores(forest, x, 256.0)

@@ -125,3 +125,21 @@ def test_exact_threshold_orderstat_matches_approx_quantile(spark):
             .collect()[0][0]
         )
         assert os_ == aq, (n, cont, os_, aq)
+
+
+def test_row_blocking_is_bit_equal_to_chunked_calls():
+    # 2 full 16,384-row blocks plus a ragged tail: anomaly_scores bounds its
+    # working set by scoring row blocks, and each row's descent is
+    # independent, so the result matches any other chunking bit for bit
+    from spark_iforest_spark.trainer import train_tree
+
+    rng = np.random.default_rng(5)
+    train = rng.standard_normal((256, 4))
+    forest = pack_forest([train_tree(train, 8, 1.0, 3, t) for t in range(6)])
+    x = rng.standard_normal((2 * 16_384 + 7, 4))
+    whole = anomaly_scores(forest, x, 256.0)
+    chunked = np.concatenate(
+        [anomaly_scores(forest, x[lo : lo + 1000], 256.0) for lo in range(0, len(x), 1000)]
+    )
+    assert whole.shape == (len(x),)
+    assert whole.tobytes() == chunked.tobytes()
